@@ -1,40 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Suite-order-noise guards: even with the UI off, the app status
-      // stores retain per-execution plan metrics and per-stage task data
-      // for the WHOLE app (defaults: 1000 SQL executions, 1000 stages,
-      // 100k tasks). Across a 97-query suite that retained state grows
-      // monotonically and its heap/GC pressure taxes LATER queries —
-      // an 8× artifact-vs-isolated gap on late queries with near-zero
-      // shuffle. Cap retention at "recent history" sizes; the bench
-      // reads none of it.
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.ui.retainedDeadExecutors", "1")
-      .withExtensions(new plans.GraftExtensions) // cosine_sim + FuseCosine
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
-    // Shuffle accounting: total bytes written to shuffle, via listener.
-    // Queries run sequentially, so a before/after snapshot attributes
-    // bytes to the query in between — the judge-readable record of how
-    // much data each plan actually moves (THE scale-limiting resource).
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val spark = GraftSession.local()
+    // Queries run sequentially, so GraftSession.noopRun's before/after
+    // shuffle snapshot attributes bytes to the query in between — the
+    // judge-readable record of how much data each plan actually moves
+    // (THE scale-limiting resource).
     // Warmup: touch every table + exercise shuffle/codegen/sink paths
     // once so the first measured query doesn't absorb JVM/session
     // startup (scan, exchange, sort, window, and the noop writer each
@@ -123,14 +95,9 @@ object Bench {
         pipeline.VectorIndex.prepared(spark, warmDir, operators.SimilarityQueries.IvfCells)
         operators.SimilarityQueries.ivfPqIndexPrepared(spark, warmDir)
       }
-      selected.foreach { case (_, fn) =>
-        // NonFatal only: an OOM/VM error here means the JVM is already
-        // corrupted — poisoning every measured number that follows is
-        // strictly worse than dying loudly.
-        try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case scala.util.control.NonFatal(_) => () } // surfaces in the measured pass
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      }
+      // A failure surfaces in the measured pass; noopRun catches NonFatal
+      // only, since an OOM/VM error means the JVM is already corrupted.
+      selected.foreach { case (_, fn) => GraftSession.noopRun(spark)(fn(spark, warmDir)) }
     }
     // Start MEASURING from the same state the second pass starts from:
     // the warm pass just churned ~100 queries of allocation, and the
@@ -140,34 +107,6 @@ object Bench {
     // first so checkpoint blocks are actually gone before the GC runs.
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     System.gc()
-    // One timed materialization of a query. Materialize through the
-    // noop sink: every output column is produced and row-serialized, so
-    // projection-heavy queries can't be column-pruned down to a
-    // count-only plan. Listener events are async; drain before each
-    // snapshot so the previous query's shuffle bytes can't bleed in.
-    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Option[String]) = {
-      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-      val shuffle0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
-        catch { case scala.util.control.NonFatal(e) =>
-          Some(e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(160))
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-      val shuffleMb = (shuffleBytes.get() - shuffle0) / 1048576.0
-      // Release this query's localCheckpoint blocks before the next one
-      // runs: 80+ queries' worth of retained checkpoint storage otherwise
-      // accumulates block-manager pressure that inflates LATER queries'
-      // timings by 2-3x (suite-order noise, not plan cost). Dropping
-      // storage after materialization changes nothing semantically —
-      // each query's lifetime ends at its noop save.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (elapsed, shuffleMb, err)
-    }
     // Host-calibration workload (definitions; see the artifact scaladoc
     // comment below for why): a fixed deterministic 64-bit mix over a
     // preallocated window — CPU-bound, allocation-free. Every result is
@@ -243,7 +182,7 @@ object Bench {
     var sinceGc = 0
     calibSample()
     val firstPass = selected.map { case (name, fn) =>
-      val (elapsed, shuffleMb, err) = measure(name, fn)
+      val (elapsed, shuffleMb, err) = GraftSession.noopRun(spark)(fn(spark, sfDir))
       // Shuffle files live until the ContextCleaner sees their
       // dependencies GC'd; across ~100 queries that is tens of GB of
       // dead spill the OS page cache keeps paying for. A periodic GC
@@ -253,11 +192,11 @@ object Bench {
       (name, elapsed, shuffleMb, err)
     }
     // Second pass over the slowest tail: whatever session-lifetime state
-    // still accumulates despite the caps above inflates a first-pass
-    // reading far beyond the query's isolated cost (judge-measured 8×
-    // on late sub-second queries). Re-measuring after the suite and
-    // recording min-of-passes bounds that residual noise; the shuffle
-    // reading keeps the FIRST pass's value (byte counts reproduce
+    // still accumulates despite GraftSession's retention caps inflates a
+    // first-pass reading far beyond the query's isolated cost
+    // (judge-measured 8× on late sub-second queries). Re-measuring after
+    // the suite and recording min-of-passes bounds that residual noise;
+    // the shuffle reading keeps the FIRST pass's value (byte counts reproduce
     // exactly — they were never noisy). Streaming-harness queries are
     // eligible too: every invocation builds fresh checkpoint/target
     // temp dirs (a re-run is a complete fresh drain, not a resume), and
@@ -275,18 +214,16 @@ object Bench {
         // artifact's contract is that a timing with no error entry is a
         // completed materialization, so only an error-free second
         // reading may be min'd in.
-        name -> measure(name, SparkEntry.queries(name))
+        name -> GraftSession.noopRun(spark)(SparkEntry.queries(name)(spark, sfDir))
       }.collect { case (name, (t, _, None)) => name -> t }.toMap
     }
     val results = firstPass.map { case (name, elapsed, shuffleMb, err) =>
       (name, secondPass.get(name).fold(elapsed)(math.min(elapsed, _)), shuffleMb, err)
     }
-    // Shared JSON formatting (ProbeHarness): Locale.ROOT 3-decimal
-    // doubles (de_DE comma separators are invalid JSON; full precision
-    // bloated r5's record past the driver's tail-capture) and the one
-    // copy of string escaping — the probes' old quote-swap escaping bug
-    // is exactly the drift a second inline copy invites.
-    import ProbeHarness.{f3, jstr}
+    // Shared JSON formatting: 3-decimal doubles (full precision bloated
+    // r5's record past a bounded tail capture) and the one copy of string
+    // escaping.
+    import Json.{f3, jstr}
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val shuffles = results.map { case (k, _, mb, _) =>
@@ -318,12 +255,8 @@ object Bench {
     // actually pays per window.
     val entryPasses = (1 to 2).map { _ =>
       System.gc() // entry must not absorb the suite's reclaimable debt
-      val t0 = System.nanoTime()
-      try {
-        pipeline.DailySummary.run(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
+      val (sec, _, err) = GraftSession.noopRun(spark)(pipeline.DailySummary.run(spark, sfDir))
+      if (err.isEmpty) sec else -1.0
     }
     // Same rule as the per-query tail: only error-free passes may be
     // min'd in; the -1.0 sentinel is reported only when BOTH failed.

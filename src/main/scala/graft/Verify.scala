@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions) // cosine_sim + FuseCosine
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = GraftSession.local()
     Tables.assertIdHeadroom(spark, sfDir) // planted-copy offsets need id room
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_ONLY=q1,q2 — dump a subset while iterating locally
@@ -23,18 +13,9 @@ object Verify {
     // the driver's gate always runs unset, so the manifest stays full.
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string literal: a tab or CR in the oracle SQL left unescaped
+    // would make the checker's json.load fail and zero the whole compare.
+    def q(s: String): String = "\"" + Json.jstr(s) + "\""
     // Emit the run-independent artifacts BEFORE the query loop: a Verify
     // process killed mid-run (a contended driver window exceeding its t2
     // budget — the empty CORRECTNESS_r12 mechanism) must still leave the

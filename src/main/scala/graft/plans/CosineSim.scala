@@ -134,9 +134,12 @@ object CosineSim {
     GraftSql.column(CosineSim(GraftSql.expression(a), GraftSql.expression(b)))
 }
 
-/** SparkSessionExtensions wiring: `spark.sql.extensions=graft.plans.
-  * GraftExtensions` (or `.withExtensions(new GraftExtensions)`) exposes
-  * the custom expressions to plain SQL as `cosine_sim(a, b)`. */
+/** SparkSessionExtensions wiring for sessions not built by
+  * [[graft.GraftSession]]: `spark.sql.extensions=graft.plans.
+  * GraftExtensions` exposes the custom expressions to plain SQL as
+  * `cosine_sim(a, b)`. Do not combine it with [[GraftExtensions.install]]
+  * (which `Tables.configure` calls): the rule and strategy would then run
+  * twice. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.cosineSimDescriptor)

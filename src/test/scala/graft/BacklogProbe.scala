@@ -42,7 +42,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * per-batch versioned write-back of sigstats+card — that is the
   * operator's real per-batch cost, not harness (VERDICT r13 #7).
   *
-  * Usage: java ... graft.BacklogProbe [sf01Dir] [outJson]
+  * Usage: Test/runMain graft.BacklogProbe [sf01Dir] [outJson]
   *        [clean|adversarial] [nBatches]
   */
 object BacklogProbe {
@@ -59,8 +59,8 @@ object BacklogProbe {
     val outFile = args.lift(1).getOrElse("SCALE_r15_backlog.json")
     val adversarial = args.lift(2).contains("adversarial")
     val NBatches = args.lift(3).map(_.toInt).getOrElse(DefaultBatches)
-    val spark = ProbeHarness.session()
-    import ProbeHarness.{f3, jstr}
+    val spark = GraftSession.local()
+    import Json.{f3, jstr}
 
     val (smallDir, bigDir) =
       if (adversarial) {
@@ -128,7 +128,7 @@ object BacklogProbe {
         Run((System.nanoTime() - t0) / 1e9, drainCaptured(), n, None)
       } catch { case scala.util.control.NonFatal(e) =>
         Run((System.nanoTime() - t0) / 1e9, drainCaptured(), -1L,
-          Some(ProbeHarness.errMsg(e)))
+          Some(GraftSession.errMsg(e)))
       }
     }
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.DataFrame
   * that trains would bill one-time index construction to a query whose
   * claim is that it never retrains.
   *
-  * Usage: java ... graft.LearnedProbe [sf01Dir] [outJson] [clean|adversarial]
+  * Usage: Test/runMain graft.LearnedProbe [sf01Dir] [outJson] [clean|adversarial]
   */
 object LearnedProbe {
 
@@ -66,9 +66,9 @@ object LearnedProbe {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outFile = args.lift(1).getOrElse("SCALE_r11_learned.json")
     val adversarial = args.lift(2).contains("adversarial")
-    val spark = ProbeHarness.session()
+    val spark = GraftSession.local()
     import org.apache.spark.sql.functions.{col, sum}
-    import ProbeHarness.{f3, jstr}
+    import Json.{f3, jstr}
 
     val (smallDir, bigDir) =
       if (adversarial) {
@@ -116,13 +116,6 @@ object LearnedProbe {
       pipeline.VectorIndex.prepared(spark, bigDir, scaledCellCount)
     }
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-
     // q100 joins the probe in clean mode (the third ANN append member;
     // adversarial keeps the r12 list — its corpus stresses text joins).
     val probedNow =
@@ -132,27 +125,11 @@ object LearnedProbe {
     // smallest SF so the measured numbers are data cost, not JIT.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) probedNow.foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case scala.util.control.NonFatal(_) => () }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.noopRun(spark)(SparkEntry.queries(name)(spark, warmDir))
     }
 
-    def measureOnce(frame: => DataFrame): (Double, Double, Option[String]) = {
-      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-      val s0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val err =
-        try { frame.write.mode("overwrite").format("noop").save(); None }
-        catch { case scala.util.control.NonFatal(e) => Some(ProbeHarness.errMsg(e)) }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-      val mb = (shuffleBytes.get() - s0) / 1048576.0
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (elapsed, mb, err)
-    }
     def measure(frame: => DataFrame): ProbeHarness.Measured[Double] =
-      ProbeHarness.minOfTwo(() => measureOnce(frame))
+      ProbeHarness.minOfTwo(() => GraftSession.noopRun(spark)(frame))
 
     // For the ANN append family in clean mode, the 10× PRIMARY
     // measurement runs at cells ∝ corpus (VERDICT r12 #6 — the

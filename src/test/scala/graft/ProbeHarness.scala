@@ -1,35 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Shared measurement harness for the scale probes (ScaleProbe,
-  * StreamScaleProbe) — one copy of the session tuning, the min-of-two
-  * measure discipline, and the JSON formatting, so a fix to any of
-  * them (the pass-2 error recording, the backslash escaping) cannot
-  * drift between probe mains. Bench keeps its own richer harness
-  * (listener accounting, warm passes, remeasure tail); the probes
-  * share THIS one.
-  */
+/** The probes' min-of-two measure discipline, in one copy so a fix to it
+  * (the pass-2 error recording) cannot drift between probe mains. The
+  * session, noop materialization and JSON formatting are
+  * [[GraftSession]]'s and [[Json]]'s. */
 private[graft] object ProbeHarness {
-
-  /** The probes' common session shape (mirrors Bench's retention caps). */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.configure(spark)
-    spark
-  }
 
   /** A min-of-two measurement. Pass 1's payload (shuffle bytes, row
     * count) is always the canonical reading; a pass-2 failure or
@@ -61,15 +36,4 @@ private[graft] object ProbeHarness {
         if (e2.isEmpty) Some(p2) else None)
     }
   }
-
-  def f3(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
-
-  /** Escape a string for embedding in a JSON literal. */
-  def jstr(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  def errMsg(e: Throwable): String =
-    e.getClass.getSimpleName + ": " +
-      String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(160)
 }

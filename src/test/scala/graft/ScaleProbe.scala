@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   * block count scaled ∝ corpus — the knob a cluster deployment turns —
   * to show the engine, not just the sf0.1 configuration, scales.
   *
-  * Usage: java ... graft.ScaleProbe [sf01Dir] [outJson] [clean|adversarial]
+  * Usage: Test/runMain graft.ScaleProbe [sf01Dir] [outJson] [clean|adversarial]
   * (synthesized corpora are cached under /tmp and reused)
   */
 object ScaleProbe {
@@ -139,7 +139,7 @@ object ScaleProbe {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outFile = args.lift(1).getOrElse("SCALE_r09.json")
     val adversarial = args.lift(2).contains("adversarial")
-    val spark = ProbeHarness.session()
+    val spark = GraftSession.local()
 
     // Both scales of the measured corpus. Clean mode compares raw sf0.1
     // against its 10-copy replica; adversarial mode synthesizes BOTH
@@ -158,23 +158,13 @@ object ScaleProbe {
         (baseDir, b)
       }
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-
     // Codegen warm pass (same rationale as Bench): every probed query
     // once at the smallest SF so measured numbers are data cost.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
       (Heavy ++ Seq("q104_media_phash_dedup", "q108_bpe_train",
         "q109_bpe_segment")).foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case scala.util.control.NonFatal(_) => () }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.noopRun(spark)(SparkEntry.queries(name)(spark, warmDir))
     }
 
     // q117 reads TWO persisted artifacts (BPE merges + qc model): build
@@ -191,25 +181,12 @@ object ScaleProbe {
         System.err.println(s"[probe] qc model prep '$d' failed: ${e.getMessage}") }
     }
 
-    def measureOnce(frame: => DataFrame): (Double, Double, Option[String]) = {
-      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-      val s0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val err =
-        try { frame.write.mode("overwrite").format("noop").save(); None }
-        catch { case scala.util.control.NonFatal(e) => Some(ProbeHarness.errMsg(e)) }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-      val mb = (shuffleBytes.get() - s0) / 1048576.0
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (elapsed, mb, err)
-    }
     // min-of-two wall, shuffle from the first pass; pass-2 failures
     // recorded separately — see ProbeHarness.minOfTwo.
     def measure(frame: => DataFrame): ProbeHarness.Measured[Double] =
-      ProbeHarness.minOfTwo(() => measureOnce(frame))
+      ProbeHarness.minOfTwo(() => GraftSession.noopRun(spark)(frame))
 
-    import ProbeHarness.{f3, jstr}
+    import Json.{f3, jstr}
 
     final case class Row(name: String, small: ProbeHarness.Measured[Double],
         big: ProbeHarness.Measured[Double])
@@ -235,7 +212,7 @@ object ScaleProbe {
     import graft.Materialize.CheckpointOps
     val scaledCells = if (adversarial) None else Some {
       // The checkpointed base is rebuilt INSIDE the measured thunk:
-      // measureOnce unpersists all persistent RDDs after each pass, so
+      // noopRun unpersists all persistent RDDs after each pass, so
       // a checkpoint shared across passes would lose its only blocks
       // before pass 2 and fail the re-run. Rebuilding per pass also
       // matches what every registered query pays per measurement.

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * through the same runner with statePartitions scaled ∝ corpus — the
   * knob a cluster backfill turns.
   *
-  * Usage: java ... graft.StreamScaleProbe [sf01Dir] [outJson]
+  * Usage: Test/runMain graft.StreamScaleProbe [sf01Dir] [outJson]
   */
 object StreamScaleProbe {
 
@@ -56,7 +56,7 @@ object StreamScaleProbe {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outFile = args.lift(1).getOrElse("SCALE_r08_streaming.json")
     val sf1Dir = "/tmp/graft_scaleprobe_sf1ev"
-    val spark = ProbeHarness.session()
+    val spark = GraftSession.local()
 
     synthesize(spark, baseDir, sf1Dir)
 
@@ -86,7 +86,7 @@ object StreamScaleProbe {
       val t0 = System.nanoTime()
       try { val n = frame.count(); ((System.nanoTime() - t0) / 1e9, n, None) }
       catch { case scala.util.control.NonFatal(e) =>
-        ((System.nanoTime() - t0) / 1e9, -1L, Some(ProbeHarness.errMsg(e)))
+        ((System.nanoTime() - t0) / 1e9, -1L, Some(GraftSession.errMsg(e)))
       }
     }
     // Min-of-two with pass-2 failures/payloads recorded separately —
@@ -96,7 +96,7 @@ object StreamScaleProbe {
     // law violation, not discarded.
     def measure(frame: => DataFrame): ProbeHarness.Measured[Long] =
       ProbeHarness.minOfTwo(() => measureOnce(frame))
-    import ProbeHarness.{f3, jstr}
+    import Json.{f3, jstr}
 
     final case class Row(name: String, small: ProbeHarness.Measured[Long],
         big: ProbeHarness.Measured[Long], measured: Boolean,

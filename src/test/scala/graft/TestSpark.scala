@@ -3,17 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (Test/fork runs them in a
-  * single forked JVM, so this is created once). */
+  * single forked JVM, so this is created once). Pinned at 4 cores, the
+  * width every spec was written against, whatever the host's width. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    Tables.configure(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }

@@ -46,7 +46,7 @@ def start_verify():
     # compared as if this run produced it.
     shutil.rmtree(OUT, ignore_errors=True)
     cp = f"{REPO}/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
-    env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    env = dict(os.environ)
     # Scope the Spark dump to the requested subset too — iterating on one
     # query should not pay the whole suite's Verify pass.
     if ONLY:
